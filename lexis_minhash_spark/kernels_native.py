@@ -1,29 +1,31 @@
-"""Optional fused C kernel for the unweighted MinHash min-reduce.
+"""Fused C kernels: the unweighted MinHash min-reduce and the per-doc
+rolling shingle hash.
 
-The NumPy formulation runs at >= 95% of NumPy's primitive throughput on
-this host (measured: u64 multiply 3.56 G/s, u64 add 3.26 G/s,
-minimum.reduceat 0.93 G/s — BENCH.md round-6 roofline), so the remaining
-per-core gap to the reference's published micro-op is a *formulation*
-limit: three memory passes (multiply, add, reduce) where one fused pass
-would do.  NumPy cannot fuse ufuncs; a ~30-line C kernel can:
+NumPy cannot fuse ufuncs, so its multiply-shift min-reduce makes three
+memory passes (multiply, add, reduce) over a (shingles × S) block where one
+fused pass would do.  A ~30-line C kernel does it in one:
 
     for each doc, for each shingle h, for j in 0..S-1:
         acc[j] = min(acc[j], (uint32)((a[j]*h + b[j]) >> 32))
 
 The ``>> 32`` moves INSIDE the min here (monotone non-decreasing, so it
-commutes with min — same deferral family as the NumPy path's, just in
-the other direction), which makes the accumulator uint32 and lets the
+commutes with min), which makes the accumulator uint32 and lets the
 compiler use the AVX2 ``vpminud`` unsigned-32 min; C unsigned arithmetic
-is exactly mod 2^64, so the result is bit-identical to the NumPy
-backends (asserted by the cross-backend tests).
+is exactly mod 2^64, so the result is bit-identical to the NumPy uint64
+reference in kernels.py (asserted by the cross-path tests).
 
 Build strategy: compiled AT FIRST USE with the system C compiler into a
-shared library cached on disk, keyed by source hash (one compile per
-host; concurrent Spark workers race-safely rename into place and every
-other process just dlopens).  No compiler, no flags that work, any
-error at all → ``load()`` returns None and kernels.py stays on the
-calibrated NumPy backends.  ctypes releases the GIL for the call, so
-Spark's per-core workers overlap fully.
+shared library cached in a per-user directory
+(``<tempdir>/lexis_minhash_native-<uid>``, mode 0700).  The file name is
+keyed on the source, the compile flags and the target CPU, so a cache
+shared between hosts never loads a ``-march=native`` build on a CPU it was
+not built for.  Concurrent Spark workers race-safely rename into place and
+every other process just dlopens.  Before dlopen, the directory and the
+library must be owned by the current user and not group- or
+world-writable.  No compiler, no flags that work, an unsafe cache, any
+error at all → ``load()`` returns None and kernels.py runs its NumPy
+uint64 path.  ctypes releases the GIL for the call, so Spark's per-core
+workers overlap fully.
 """
 
 from __future__ import annotations
@@ -31,6 +33,8 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import platform
+import stat
 import subprocess
 import tempfile
 
@@ -93,31 +97,64 @@ void rolling_hashes_multi(const uint8_t *data, const int64_t *starts,
 }
 """
 
-_CACHE_DIR = os.path.join(tempfile.gettempdir(), "lexis_minhash_native")
+_FLAG_SETS = (("-O3", "-march=native"), ("-O3",))
 _LIB = None
 _LOAD_TRIED = False
 
 
-def _build(src: str, path: str) -> bool:
+def _cache_dir() -> str:
+    return os.path.join(tempfile.gettempdir(), f"lexis_minhash_native-{os.getuid()}")
+
+
+def _cpu_tag() -> str:
+    """The target a ``-march=native`` build is specific to: the machine
+    plus the first ISA feature line of /proc/cpuinfo (when readable)."""
+    feats = ""
+    try:
+        with open("/proc/cpuinfo") as f:
+            for line in f:
+                if line.startswith(("flags", "Features")):
+                    feats = line
+                    break
+    except OSError:
+        pass
+    return platform.machine() + "|" + feats
+
+
+def _lib_path(cache: str, flags: tuple[str, ...]) -> str:
+    key = "\0".join((_C_SOURCE, " ".join(flags), _cpu_tag()))
+    tag = hashlib.sha256(key.encode()).hexdigest()[:16]
+    return os.path.join(cache, f"minhash_{tag}.so")
+
+
+def _is_private(path: str, kind) -> bool:
+    """``path`` is a ``kind`` (not a symlink), owned by this user, and not
+    group- or world-writable — i.e. nobody else can have planted it."""
+    st = os.lstat(path)
+    return (
+        kind(st.st_mode)
+        and st.st_uid == os.getuid()
+        and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH)
+    )
+
+
+def _build(src: str, flags: tuple[str, ...], path: str) -> bool:
     """Compile ``src`` → shared library at ``path`` (atomic rename)."""
-    os.makedirs(_CACHE_DIR, exist_ok=True)
     cfile = path + f".{os.getpid()}.c"
     tmpso = path + f".{os.getpid()}.tmp"
     with open(cfile, "w") as f:
         f.write(src)
     try:
-        for flags in (["-O3", "-march=native"], ["-O3"]):
-            try:
-                subprocess.run(
-                    ["cc", *flags, "-shared", "-fPIC", cfile, "-o", tmpso],
-                    check=True,
-                    capture_output=True,
-                    timeout=120,
-                )
-                os.replace(tmpso, path)  # atomic: concurrent builders race safely
-                return True
-            except Exception:
-                continue
+        subprocess.run(
+            ["cc", *flags, "-shared", "-fPIC", cfile, "-o", tmpso],
+            check=True,
+            capture_output=True,
+            timeout=120,
+        )
+        os.chmod(tmpso, 0o700)
+        os.replace(tmpso, path)  # atomic: concurrent builders race safely
+        return True
+    except Exception:
         return False
     finally:
         for p in (cfile, tmpso):
@@ -127,18 +164,34 @@ def _build(src: str, path: str) -> bool:
                 pass
 
 
+def _find_or_build(cache: str) -> str | None:
+    """Path of a cached library for this source/CPU, building one (best
+    flags first) when none exists yet."""
+    paths = [(flags, _lib_path(cache, flags)) for flags in _FLAG_SETS]
+    for _, path in paths:
+        if os.path.exists(path):
+            return path
+    for flags, path in paths:
+        if _build(_C_SOURCE, flags, path):
+            return path
+    return None
+
+
 def load():
-    """Return the ctypes-bound fused kernel, or None if unavailable."""
+    """Return the ctypes-bound fused kernels, or None if unavailable."""
     global _LIB, _LOAD_TRIED
     if _LOAD_TRIED:
         return _LIB
     _LOAD_TRIED = True
     if os.environ.get("LEXIS_NATIVE_KERNEL", "1") == "0":
         return None
-    tag = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    path = os.path.join(_CACHE_DIR, f"minhash_{tag}.so")
     try:
-        if not os.path.exists(path) and not _build(_C_SOURCE, path):
+        cache = _cache_dir()
+        os.makedirs(cache, mode=0o700, exist_ok=True)
+        if not _is_private(cache, stat.S_ISDIR):
+            return None
+        path = _find_or_build(cache)
+        if path is None or not _is_private(path, stat.S_ISREG):
             return None
         lib = ctypes.CDLL(path)
         lib.minhash_fused.restype = None

@@ -7,14 +7,15 @@ Pipeline shape (axes: pyspark × audio):
         └─ decode PCM (per-row: ragged binary — the one unavoidable
            per-row step) → frame energy envelope → loudness-invariant
            4-bit quantization → w-frame rolling shingles hashed with the
-           SAME P=31 byte kernel (kernels.shingle_hashes_bytes) →
+           SAME P=31 byte kernel (kernels.batch_shingle_hashes_bytes) →
            minhash_batch → band_hashes_batch
     then ops.bands_table / candidate_pairs / verified_pairs unchanged —
     the audio path reuses every downstream relational stage (zero-sig
     quarantine, hot-bucket caps, codegen verify, connected components).
 
 Scale notes: the UDF is one Arrow pass per batch; all hashing/min-reduce is
-the blocked NumPy kernel.  Quantization normalizes by the clip's own peak
+the batch kernel path (fused C when it loads, else blocked NumPy).
+Quantization normalizes by the clip's own peak
 energy, so uniform gain changes don't move the fingerprint; the envelope is
 NOT shift-invariant (same-offset near-dups, the dedup case for re-encoded /
 re-noised copies of one recording — time-aligned by construction).
@@ -109,25 +110,11 @@ def audio_signature_udf(
                     continue
                 streams.append(quantize_envelope(pcm, int(sr), frame_ms))
             lens = np.array([s.shape[0] for s in streams], dtype=np.int64)
-            counts = np.maximum(lens - (window_frames - 1), 0)
-            ok = counts > 0
-            big = (
-                np.concatenate([s for s in streams if s.shape[0] > 0])
-                if lens.sum() > 0
-                else np.empty(0, dtype=np.uint8)
+            big = np.concatenate(streams) if n else np.empty(0, dtype=np.uint8)
+            hc, counts = K.batch_shingle_hashes_bytes(
+                big, np.cumsum(lens) - lens, lens, window_frames
             )
-            if big.size >= window_frames:
-                h_all = K.shingle_hashes_bytes(big, window_frames)
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                # windows fully inside one clip: global index minus its
-                # clip's start must be < the clip's window count
-                idx = np.arange(h_all.shape[0], dtype=np.int64)
-                owner = np.searchsorted(starts, idx, side="right") - 1
-                keep = (idx - starts[owner]) < counts[owner]
-                hc = h_all[keep]
-            else:
-                hc = np.empty(0, dtype=np.uint64)
-                counts = np.zeros(n, dtype=np.int64)
+            ok = counts > 0
             sig_mat = np.zeros((n, cfg.signature_size), dtype=np.uint32)
             if hc.size:
                 sig_mat[ok] = K.minhash_batch(hc, counts[ok], a, b)

@@ -290,7 +290,9 @@ def candidate_pairs_grouped(
             )
         ).alias("p")
     ).select("p.a", "p.b")
-    return pairs.distinct()
+    # strict a < b: a packed-key collision between two of ONE doc's bands
+    # puts that doc twice in a bucket, which would otherwise emit (x, x)
+    return pairs.where(F.col("a") < F.col("b")).distinct()
 
 
 def similarity_udf_binary():
@@ -375,7 +377,6 @@ def verified_pairs(
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 25,
     driver_threshold: int | None = 5_000_000,
 ) -> DataFrame:
     """Connected components over the verified-pair edge list → clusters
@@ -396,9 +397,6 @@ def connected_components(
       SoCC'14; operators/cc.py) — O(log^2 n) rounds worst case,
       localCheckpoint per round.
 
-    ``max_iter`` only applies to the legacy min-label propagation kept in
-    ``_cc_propagation`` for cross-checks.
-
     Input: edges(a, b). Output: (doc_id, cluster_id) for every node that
     appears in an edge (singletons are their own cluster by definition and
     are added by the caller via a left join)."""
@@ -409,40 +407,6 @@ def connected_components(
     from lexis_minhash_spark.operators.cc import large_star_small_star
 
     return large_star_small_star(edges.select("a", "b"))
-
-
-def _cc_propagation(
-    edges: DataFrame,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Legacy distributed strategy: min-label propagation (O(diameter)
-    rounds). Kept for cross-checking the LS/SS implementation."""
-    nodes = (
-        edges.select(F.col("a").alias("node"))
-        .union(edges.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    comp = nodes.withColumn("comp", F.col("node")).localCheckpoint()
-    sym = edges.select("a", "b").union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.localCheckpoint()
-    for _ in range(max_iter):
-        msgs = (
-            sym.join(comp, sym.a == comp.node)
-            .select(F.col("b").alias("node"), F.col("comp"))
-            .union(comp.select("node", "comp"))
-        )
-        new_comp = msgs.groupBy("node").agg(F.min("comp").alias("comp")).localCheckpoint()
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "node")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
-            break
-    return comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 
 def _cc_numpy(a_idx: np.ndarray, b_idx: np.ndarray, n: int) -> np.ndarray:

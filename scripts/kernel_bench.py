@@ -43,7 +43,7 @@ def main() -> None:
         blob = np.ascontiguousarray(sig, dtype="<u4").tobytes()
         return hc.size, sig, bands, blob
 
-    full_path()  # warm (allocators, scratch cache, BLAS init)
+    full_path()  # warm (allocators, scratch cache, native library load)
     best = float("inf")
     for _ in range(reps):
         t0 = time.perf_counter()
@@ -58,6 +58,7 @@ def main() -> None:
             "docs_per_sec": round(n_docs / best, 1),
             "shingles_per_sec": round(n_shingles / best, 1),
             "checksum": checksum,
+            "backend": "native" if K._native_fused_available() else "u64",
             "loadavg": round(os.getloadavg()[0], 2),
         }
     )

@@ -3,6 +3,7 @@ plus ports of the reference's behavioral spec assertions
 (/root/reference/spec/*.cr — cited per test)."""
 
 import math
+import os
 
 import numpy as np
 import pytest
@@ -10,6 +11,7 @@ from hypothesis import given, settings, strategies as st
 
 from lexis_minhash_spark.config import DEFAULT_CONFIG, EngineConfig, seeded_coefficients
 from lexis_minhash_spark import kernels as K
+from lexis_minhash_spark import kernels_native as KN
 from lexis_minhash_spark import oracle as O
 
 CFG = EngineConfig(seed=12345)
@@ -347,95 +349,198 @@ class TestSimhash:
         assert blocks.tolist() == [0xCDEF, 0x89AB, 0x4567, 0x0123]
 
 
+def _on_reference(fn, *args, **kwargs):
+    """Run ``fn`` with the native library reported unavailable, i.e. on the
+    NumPy uint64 reference path."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(K, "_native_fused_available", lambda: False)
+        return fn(*args, **kwargs)
+
+
+needs_native = pytest.mark.skipif(
+    KN.load() is None, reason="no native kernel on this host"
+)
+
+
+@needs_native
 class TestMulshiftBackends:
-    """Round-5: the multiply-shift backend is host-calibrated (direct
-    uint64 vs limb-GEMM).  Both must be bit-identical on every input —
-    C unsigned wraparound IS mod 2^64, so this is a hard equality."""
+    """The two hash-kernel backends — the fused C kernels and the NumPy
+    uint64 reference — must be bit-identical on every input: C unsigned
+    wraparound IS mod 2^64, so this is a hard equality."""
 
-    def _signatures(self, backend, h, counts, a, b, monkeypatch):
-        import importlib
-        monkeypatch.setenv("LEXIS_MULSHIFT_BACKEND", backend)
-        return K.minhash_batch(h, counts, a, b)
-
-    def test_backends_bit_identical(self, monkeypatch):
+    def test_backends_bit_identical(self):
         rng = np.random.default_rng(7)
         counts = rng.integers(0, 90, 64)
         n = int(counts.sum())
         h = rng.integers(0, 2**64, n, dtype=np.uint64)
         a, b = seeded_coefficients(12345, 100)
-        s1 = self._signatures("u64", h, counts, a, b, monkeypatch)
-        s2 = self._signatures("gemm", h, counts, a, b, monkeypatch)
-        assert np.array_equal(s1, s2)
+        ref = _on_reference(K.minhash_batch, h, counts, a, b)
+        assert np.array_equal(ref, K.minhash_batch(h, counts, a, b))
 
-    def test_native_fused_bit_identical(self, monkeypatch):
-        # round-6: the fused C kernel (kernels_native) must be bit-equal
-        # to the NumPy backends on random inputs, including empty docs
-        # (UInt32::MAX init rows).  Skips cleanly when no C compiler.
-        from lexis_minhash_spark import kernels_native as KN
+    @given(
+        st.lists(
+            st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=40),
+            min_size=1, max_size=12,
+        ),
+        st.integers(min_value=1, max_value=64),
+    )
+    @settings(max_examples=40, deadline=None)
+    def test_backends_bit_identical_property(self, docs, s):
+        # unweighted MinHash, empty docs included (UInt32::MAX init rows)
+        h = np.array([x for d in docs for x in d], dtype=np.uint64)
+        counts = np.array([len(d) for d in docs], dtype=np.int64)
+        a, b = seeded_coefficients(99, s)
+        ref = _on_reference(K.minhash_batch, h, counts, a, b)
+        assert np.array_equal(ref, K.minhash_batch(h, counts, a, b))
+        assert ref[counts == 0].tolist() == [[0xFFFFFFFF] * s] * int((counts == 0).sum())
 
-        if KN.load() is None:
-            import pytest
-
-            pytest.skip("no native kernel on this host")
+    def test_native_fused_bit_identical(self):
+        # the fused C entry point called directly, explicit empty doc
         rng = np.random.default_rng(11)
         counts = rng.integers(0, 90, 64)
-        counts[5] = 0  # explicit empty doc
+        counts[5] = 0
         n = int(counts.sum())
         h = rng.integers(0, 2**64, n, dtype=np.uint64)
         a, b = seeded_coefficients(12345, 100)
-        ref = self._signatures("u64", h, counts, a, b, monkeypatch)
-        got = self._signatures("native", h, counts, a, b, monkeypatch)
-        assert np.array_equal(ref, got)
+        ref = _on_reference(K.minhash_batch, h, counts, a, b)
         starts = np.concatenate(([0], np.cumsum(counts)[:-1])).astype(np.int64)
         direct = KN.minhash_fused(h, starts, counts.astype(np.int64), a, b)
         assert np.array_equal(ref, direct)
 
-    def test_native_rolling_bit_identical(self, monkeypatch):
-        # round-6: the incremental C rolling hash must equal the NumPy
-        # Horner-over-concat + boundary-mask path, including docs shorter
-        # than / equal to k.  Skips cleanly when no C compiler.
-        from lexis_minhash_spark import kernels_native as KN
-
-        if KN.load() is None:
-            import pytest
-
-            pytest.skip("no native kernel on this host")
+    def test_native_rolling_bit_identical(self):
+        # incremental C rolling hash vs the Horner-over-concat + gather,
+        # including docs shorter than / equal to k
         texts = [
             "the quick brown fox jumps over the lazy dog",
             "", "ab", "abcd", "abcde", "abcdef", "x" * 5,
             "pack my box with five dozen liquor jugs",
         ]
         for k in (2, 5, 9):
-            monkeypatch.setenv("LEXIS_ROLLING_BACKEND", "u64")
-            h1, c1 = K.batch_shingle_hashes(texts, k)
-            monkeypatch.setenv("LEXIS_ROLLING_BACKEND", "native")
+            h1, c1 = _on_reference(K.batch_shingle_hashes, texts, k)
             h2, c2 = K.batch_shingle_hashes(texts, k)
             assert np.array_equal(h1, h2) and np.array_equal(c1, c2), k
+            assert c1.tolist() == [max(len(t) - k + 1, 0) for t in texts]
+        data = np.zeros(8, dtype=np.uint8)
+        for starts, lens, k in (([0], [9], 5), ([-1], [3], 2), ([0, 4], [4], 2), ([0], [8], 0)):
+            with pytest.raises(ValueError):
+                K.batch_shingle_hashes_bytes(data, np.array(starts), np.array(lens), k)
 
     @given(
-        st.lists(st.integers(min_value=0, max_value=2**64 - 1), min_size=1, max_size=200),
-        st.integers(min_value=1, max_value=64),
+        st.lists(st.binary(max_size=24), min_size=1, max_size=10),
+        st.sampled_from([2, 5, 9]),
+        st.integers(min_value=0, max_value=3),
     )
-    @settings(max_examples=30, deadline=None)
-    def test_backends_bit_identical_property(self, hashes, s):
-        import os as _os
-        h = np.array(hashes, dtype=np.uint64)
-        counts = np.array([len(hashes)])
-        a, b = seeded_coefficients(99, s)
-        old = _os.environ.get("LEXIS_MULSHIFT_BACKEND")
-        try:
-            _os.environ["LEXIS_MULSHIFT_BACKEND"] = "u64"
-            s1 = K.minhash_batch(h, counts, a, b)
-            _os.environ["LEXIS_MULSHIFT_BACKEND"] = "gemm"
-            s2 = K.minhash_batch(h, counts, a, b)
-        finally:
-            if old is None:
-                _os.environ.pop("LEXIS_MULSHIFT_BACKEND", None)
-            else:
-                _os.environ["LEXIS_MULSHIFT_BACKEND"] = old
-        assert np.array_equal(s1, s2)
+    @settings(max_examples=40, deadline=None)
+    def test_rolling_bytes_property(self, streams, k, gap):
+        # bytes-level entry with arbitrary (non-contiguous) doc offsets
+        lens = np.array([len(x) for x in streams], dtype=np.int64)
+        starts = np.cumsum(lens + gap) - (lens + gap)
+        data = np.frombuffer(b"".join(x + b"\x07" * gap for x in streams), dtype=np.uint8)
+        h1, c1 = _on_reference(K.batch_shingle_hashes_bytes, data, starts, lens, k)
+        h2, c2 = K.batch_shingle_hashes_bytes(data, starts, lens, k)
+        assert np.array_equal(h1, h2) and np.array_equal(c1, c2)
+        exp = [
+            sum(c * 31 ** (k - 1 - j) for j, c in enumerate(x[i : i + k])) % 2**64
+            for x in streams
+            for i in range(len(x) - k + 1)
+        ]
+        assert h1.tolist() == exp
 
-    def test_calibration_picks_a_backend(self):
-        import lexis_minhash_spark.kernels as KK
-        choice = KK._pick_mulshift_backend(100)
-        assert choice in ("u64", "gemm", "native")
+    def test_simhash_mix(self):
+        # the mix is (msh(a1,b1,h) << 32) | msh(a2,b2,h) in exact integers,
+        # and whole-batch fingerprints agree across the two rolling paths
+        texts = ["the quick brown fox jumps", "", "abc", "hello world test doc"]
+        hc, counts = K.batch_shingle_hashes(texts, 5)
+        (a1, a2), (b1, b2) = (
+            x.tolist() for x in seeded_coefficients(K.SIMHASH_MIX_SEED, 2)
+        )
+        exp = [
+            ((((a1 * h + b1) % 2**64) >> 32) << 32) | (((a2 * h + b2) % 2**64) >> 32)
+            for h in hc.tolist()
+        ]
+        assert K._simhash_mix(hc).tolist() == exp
+        ref = _on_reference(
+            lambda: K.simhash_batch(*K.batch_shingle_hashes(texts, 5))
+        )
+        assert np.array_equal(ref, K.simhash_batch(hc, counts))
+
+
+@pytest.mark.parametrize("reference", [False, True])
+def test_kernel_bench_checksum_pinned(reference):
+    # the scripts/kernel_bench.py chain at 2,000 docs, pinned on both paths
+    from lexis_minhash_spark.sources.synth import generate_clips
+
+    clips, _ = generate_clips(n_clips=2000, seed=42, with_audio=False)
+    texts = [t.lower().strip() for t in clips["transcript"].tolist()]
+
+    def chain():
+        hc, counts = K.batch_shingle_hashes(texts, CFG.shingle_size)
+        sig = K.minhash_batch(hc, counts, A, B)
+        bands = K.band_hashes_batch(sig, CFG.num_bands, CFG.rows_per_band)
+        return int(sig.astype(np.uint64).sum() + bands.view(np.uint64).sum())
+
+    assert (_on_reference(chain) if reference else chain()) == 2117071155611745985
+
+
+class TestNativeCache:
+    """The build cache must never dlopen a library someone else could have
+    planted: per-user directory, owner and write-bit checks before CDLL."""
+
+    @pytest.fixture
+    def fresh(self, monkeypatch, tmp_path):
+        monkeypatch.delenv("LEXIS_NATIVE_KERNEL", raising=False)
+        monkeypatch.setattr(KN, "_LIB", None)
+        monkeypatch.setattr(KN, "_LOAD_TRIED", False)
+        cache = tmp_path / "cache"
+        monkeypatch.setattr(KN, "_cache_dir", lambda: str(cache))
+
+        def reload():
+            monkeypatch.setattr(KN, "_LIB", None)
+            monkeypatch.setattr(KN, "_LOAD_TRIED", False)
+            return KN.load()
+
+        return cache, reload
+
+    @pytest.mark.parametrize("mode", [0o777, 0o770, 0o722], ids=oct)
+    def test_refuses_writable_cache_dir(self, fresh, mode):
+        cache, reload = fresh
+        cache.mkdir()
+        cache.chmod(mode)
+        assert reload() is None
+        assert list(cache.iterdir()) == []  # refused before any build
+
+    def test_refuses_foreign_owned_cache_dir(self, fresh, monkeypatch):
+        cache, reload = fresh
+        cache.mkdir(mode=0o700)
+        real_uid = os.getuid()
+        monkeypatch.setattr(os, "getuid", lambda: real_uid + 1)
+        assert reload() is None
+
+    def test_refuses_symlinked_cache_dir(self, fresh, tmp_path):
+        cache, reload = fresh
+        target = tmp_path / "elsewhere"
+        target.mkdir(mode=0o700)
+        cache.symlink_to(target)
+        assert reload() is None
+
+    @needs_native
+    def test_private_cache_builds_and_loads(self, fresh):
+        cache, reload = fresh
+        assert reload() is not None
+        assert (cache.stat().st_mode & 0o777) == 0o700
+        (so,) = cache.iterdir()
+        assert not so.stat().st_mode & 0o022
+
+    @needs_native
+    def test_refuses_writable_library(self, fresh):
+        cache, reload = fresh
+        assert reload() is not None
+        (so,) = cache.iterdir()
+        so.chmod(0o666)
+        assert reload() is None
+
+    def test_library_name_keyed_on_flags_and_cpu(self, monkeypatch):
+        p1 = KN._lib_path("/c", ("-O3", "-march=native"))
+        assert p1 != KN._lib_path("/c", ("-O3",))
+        monkeypatch.setattr(KN, "_cpu_tag", lambda: "other-cpu")
+        assert p1 != KN._lib_path("/c", ("-O3", "-march=native"))
