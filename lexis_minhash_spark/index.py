@@ -54,7 +54,9 @@ class LSHIndexDF:
         self._signatures = sig if self._signatures is None else self._signatures.unionByName(sig)
 
     def add_signatures(self, sig_df: DataFrame) -> None:
-        """Append a precomputed signatures table (add_with_signature path)."""
+        """Append a precomputed signatures table (add_with_signature path):
+        ``doc_id`` plus the ops.SIGNATURE_STRUCT columns, the signature in
+        ``sig_arr``."""
         self._signatures = (
             sig_df if self._signatures is None else self._signatures.unionByName(sig_df)
         )
@@ -68,14 +70,12 @@ class LSHIndexDF:
 
         @pandas_udf(ArrayType(LongType()))
         def reband(sigs: pd.Series) -> pd.Series:
-            out = []
-            for blob in sigs:
-                sig = np.frombuffer(blob, dtype="<u4").astype(np.uint32)
-                bh = K.band_hashes_batch(sig[None, :], nb, cfg.rows_per_band)[0]
-                out.append(bh.view(np.int64))
-            return pd.Series(out)
+            if sigs.empty:
+                return pd.Series([], dtype=object)
+            mat = np.stack(sigs.to_list()).view(np.uint32)
+            return pd.Series(list(K.band_hashes_batch(mat, nb, cfg.rows_per_band).view(np.int64)))
 
-        return sig_df.withColumn("bands", reband(F.col("sig")))
+        return sig_df.withColumn("bands", reband(F.col("sig_arr")))
 
     # -- read side ---------------------------------------------------------
 
@@ -97,8 +97,8 @@ class LSHIndexDF:
 
     def get_signature(self, doc_id) -> np.ndarray | None:
         """L10 point lookup (index.cr:220-222)."""
-        row = self.signatures.where(F.col("doc_id") == doc_id).select("sig").head()
-        return None if row is None else np.frombuffer(row.sig, dtype="<u4").astype(np.uint32)
+        row = self.signatures.where(F.col("doc_id") == doc_id).select("sig_arr").head()
+        return None if row is None else np.asarray(row.sig_arr, dtype=np.int32).view(np.uint32)
 
     def load_factors(self) -> DataFrame:
         """L4 metrics (index.cr:231-233) as a metrics query."""

@@ -446,22 +446,11 @@ def shared_bands(bands1: np.ndarray, bands2: np.ndarray) -> int:
 # ---------------------------------------------------------------------------
 
 def signature_to_bytes(signature: np.ndarray) -> bytes:
-    """Explicit little-endian uint32 blob (engine/serialize.cr:5-14).
-
-    This is the repo's ONE canonical wire format.  The reference also has a
-    native-endian ``Signature#to_blob`` (engine.cr:48-51); see
-    signature_to_bytes_native."""
+    """Explicit little-endian uint32 blob (engine/serialize.cr:5-14), the
+    one wire format; it also stands in for the reference's native-endian
+    ``Signature#to_blob`` (engine.cr:48-51), whose bytes are the same on
+    every little-endian host."""
     return np.ascontiguousarray(signature, dtype="<u4").tobytes()
-
-
-def signature_to_bytes_native(signature: np.ndarray) -> bytes:
-    """Native-endian twin of the reference's ``Signature#to_blob``
-    (engine.cr:48-51).  On every little-endian host (x86-64, aarch64 in LE
-    mode — all Spark deployment targets) the bytes are identical to
-    signature_to_bytes; it exists so ported call sites keep their
-    semantics documented.  Round-trips through bytes_to_signature only on
-    little-endian hosts (the canonical format is explicitly LE)."""
-    return np.ascontiguousarray(signature, dtype=np.uint32).tobytes()
 
 
 def bytes_to_signature(blob: bytes) -> np.ndarray:

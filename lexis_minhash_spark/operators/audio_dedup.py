@@ -119,10 +119,8 @@ def audio_signature_udf(
             if hc.size:
                 sig_mat[ok] = K.minhash_batch(hc, counts[ok], a, b)
             band_mat = K.band_hashes_batch(sig_mat, cfg.num_bands, cfg.rows_per_band)
-            sig_le = np.ascontiguousarray(sig_mat, dtype="<u4")
             yield pd.DataFrame(
                 {
-                    "sig": [sig_le[i].tobytes() for i in range(n)],
                     "sig_arr": list(sig_mat.view(np.int32)),
                     "bands": list(band_mat.view(np.int64)),
                     "is_zero": ~ok,
@@ -155,14 +153,7 @@ def with_audio_signatures(
     return (
         clips.select(id_col, bytes_col, codec_col, sr_col)
         .withColumn("_s", u(F.col(bytes_col), F.col(codec_col), F.col(sr_col)))
-        .select(
-            F.col(id_col),
-            F.col("_s.sig").alias("sig"),
-            F.col("_s.sig_arr").alias("sig_arr"),
-            F.col("_s.bands").alias("bands"),
-            F.col("_s.is_zero").alias("is_zero"),
-            F.col("_s.n_shingles").alias("n_shingles"),
-        )
+        .select(id_col, "_s.*")
     )
 
 
@@ -218,8 +209,8 @@ def audio_near_dup_pairs(
     # of a far narrower table.  Fan the cache in 4:1 (floored at cluster
     # width) — a shuffle-free coalesce merging adjacent splits; the decode
     # UDF still runs at >= defaultParallelism.  Persist only the columns
-    # downstream consumers read (id, sig_arr, bands, is_zero) — the
-    # canonical blob + n_shingles stay derivable but uncached (guide §2.3).
+    # downstream consumers read (id, sig_arr, bands, is_zero) — n_shingles
+    # stays derivable but uncached (guide §2.3).
     # Measured (5k clips, 128 splits): 5.8 s -> 3.4 s, identical pairs.
     n_parts = clips.rdd.getNumPartitions()  # == sig's (narrow 1:1 stage)
     width = clips.sparkSession.sparkContext.defaultParallelism

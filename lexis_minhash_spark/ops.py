@@ -1,12 +1,13 @@
 """DataFrame stage builders + Arrow pandas-UDF wrappers around kernels.py.
 
 The reference's LSHIndex (index.cr) becomes plain DataFrames:
-  signatures(doc_id, sig: binary, sig_arr: array<int>, bands: array<long>,
-             is_zero, n_shingles)
+  signatures(doc_id, sig_arr: array<int>, bands: array<long>, is_zero,
+             n_shingles)
   bands(doc_id, band_idx: int, band_hash: long)       -- posexplode
-``sig`` is the canonical little-endian blob (interchangeable with the
-reference, serialize.cr); ``sig_arr`` is the signed-int32 reinterpret used
-by the pure-SQL verify join (equality-safe, keeps verification JVM-side).
+``sig_arr`` is the one signature column: the uint32 signature reinterpreted
+as signed int32 (equality-safe, so verify, scoring and the slot dump stay
+codegen'd SQL).  The little-endian blob the reference serializes
+(serialize.cr) is derived only at that boundary, kernels.signature_to_bytes.
 The index's operations become joins/aggregations (SURVEY.md §2.3).
 
 Scale notes (100 TB design point):
@@ -31,9 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StructField,
@@ -42,10 +41,10 @@ from pyspark.sql.types import (
 
 from lexis_minhash_spark.config import EngineConfig
 from lexis_minhash_spark import kernels as K
+from lexis_minhash_spark.functions.similarity import sig_similarity_expr
 
 SIGNATURE_STRUCT = StructType(
     [
-        StructField("sig", BinaryType(), False),
         StructField("sig_arr", ArrayType(IntegerType(), False), False),
         StructField("bands", ArrayType(LongType(), False), False),
         StructField("is_zero", BooleanType(), False),
@@ -100,11 +99,9 @@ def _compute_batch(
         counts_full[ok_idx] = counts
     band_mat = K.band_hashes_batch(sig_mat, cfg.num_bands, cfg.rows_per_band)
     band_signed = band_mat.view(np.int64)
-    sig_le = np.ascontiguousarray(sig_mat, dtype="<u4")
     sig_i32 = sig_mat.view(np.int32)  # signed reinterpret: equality-safe
     return pd.DataFrame(
         {
-            "sig": [sig_le[i].tobytes() for i in range(n)],
             "sig_arr": list(sig_i32),
             "bands": list(band_signed),
             "is_zero": ~ok,
@@ -114,7 +111,8 @@ def _compute_batch(
 
 
 def make_signature_udf(cfg: EngineConfig, weights_hashed: dict[int, float] | None = None):
-    """pandas UDF text → struct(sig, bands, is_zero, n_shingles).
+    """pandas UDF text → SIGNATURE_STRUCT (sig_arr, bands, is_zero,
+    n_shingles).
 
     Iterator form so config/coefficients are materialized once per worker.
     """
@@ -139,19 +137,13 @@ def with_signatures(
     id_col: str = "doc_id",
     weights_hashed: dict[int, float] | None = None,
 ) -> DataFrame:
-    """documents → signatures table (L5 add, index.cr:114-122, as a stage)."""
+    """documents → signatures table (L5 add, index.cr:114-122, as a stage):
+    ``id_col`` plus the SIGNATURE_STRUCT columns."""
     udf = make_signature_udf(cfg, weights_hashed)
     return (
         df.select(id_col, text_col)
         .withColumn("_s", udf(F.col(text_col)))
-        .select(
-            F.col(id_col),
-            F.col("_s.sig").alias("sig"),
-            F.col("_s.sig_arr").alias("sig_arr"),
-            F.col("_s.bands").alias("bands"),
-            F.col("_s.is_zero").alias("is_zero"),
-            F.col("_s.n_shingles").alias("n_shingles"),
-        )
+        .select(id_col, "_s.*")
     )
 
 
@@ -295,39 +287,6 @@ def candidate_pairs_grouped(
     return pairs.where(F.col("a") < F.col("b")).distinct()
 
 
-def similarity_udf_binary():
-    """pandas UDF (sig_bin, sig_bin) → double, the S1 estimated-Jaccard
-    verify kernel (engine.cr:365-375) on little-endian uint32 blobs."""
-
-    @pandas_udf(DoubleType())
-    def sig_similarity(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for s1, s2 in it:
-            n = len(s1)
-            if n == 0:
-                yield pd.Series([], dtype=np.float64)
-                continue
-            lens1 = s1.str.len()
-            lens2 = s2.str.len()
-            out = np.zeros(n, dtype=np.float64)
-            same = (lens1 == lens2) & (lens1 > 0)
-            if same.any():
-                width = int(lens1[same].iloc[0]) // 4
-                uniform = same & (lens1 == width * 4) & (lens2 == width * 4)
-                idx = np.nonzero(uniform.to_numpy())[0]
-                if idx.size:
-                    m1 = np.frombuffer(b"".join(s1.iloc[idx]), dtype="<u4").reshape(idx.size, width)
-                    m2 = np.frombuffer(b"".join(s2.iloc[idx]), dtype="<u4").reshape(idx.size, width)
-                    out[idx] = (m1 == m2).mean(axis=1)
-                rest = np.nonzero((same & ~uniform).to_numpy())[0]
-                for i in rest:
-                    a = np.frombuffer(s1.iat[i], dtype="<u4")
-                    bb = np.frombuffer(s2.iat[i], dtype="<u4")
-                    out[i] = K.signature_similarity(a, bb)
-            yield pd.Series(out)
-
-    return sig_similarity
-
-
 def verified_pairs(
     cand_df: DataFrame,
     sig_df: DataFrame,
@@ -341,35 +300,22 @@ def verified_pairs(
     ``zip_with``/``aggregate`` over the int32 signature arrays — no Arrow
     round-trip in the verify join (the pandas-UDF variant measured worse
     and anti-scaled with cores)."""
-    if "sig_arr" in sig_df.columns:
-        from lexis_minhash_spark.functions.similarity import sig_similarity_expr
-
-        # Both verify legs join the IDENTICAL (id, sig_arr) subtree — not
-        # two differently-aliased projections — so when the planner
-        # broadcasts the signature side, the second leg reuses the first
-        # leg's built relation (ReusedExchange) instead of collecting and
-        # hashing the signature table twice (guide §2.4: two operations
-        # keyed the same way share one exchange).  Measured on the 50k-clip
-        # bench verify: 0.80 s → 0.59 s, identical output.
-        kv = sig_df.select(F.col(id_col).alias("_vid"), F.col("sig_arr").alias("_vsig"))
-        j1 = cand_df.join(kv, cand_df["a"] == kv["_vid"]).select(
-            "a", "b", F.col("_vsig").alias("sig_a")
-        )
-        j2 = j1.join(kv, j1["b"] == kv["_vid"]).select(
-            "a", "b", "sig_a", F.col("_vsig").alias("sig_b")
-        )
-        return (
-            j2.withColumn("similarity", sig_similarity_expr("sig_a", "sig_b"))
-            .where(F.col("similarity") >= F.lit(threshold))
-            .select("a", "b", "similarity")
-        )
-    sim = similarity_udf_binary()
-    sa = sig_df.select(F.col(id_col).alias("a"), F.col("sig").alias("sig_a"))
-    sb = sig_df.select(F.col(id_col).alias("b"), F.col("sig").alias("sig_b"))
+    # Both verify legs join the IDENTICAL (id, sig_arr) subtree — not
+    # two differently-aliased projections — so when the planner
+    # broadcasts the signature side, the second leg reuses the first
+    # leg's built relation (ReusedExchange) instead of collecting and
+    # hashing the signature table twice (guide §2.4: two operations
+    # keyed the same way share one exchange).  Measured on the 50k-clip
+    # bench verify: 0.80 s → 0.59 s, identical output.
+    kv = sig_df.select(F.col(id_col).alias("_vid"), F.col("sig_arr").alias("_vsig"))
+    j1 = cand_df.join(kv, cand_df["a"] == kv["_vid"]).select(
+        "a", "b", F.col("_vsig").alias("sig_a")
+    )
+    j2 = j1.join(kv, j1["b"] == kv["_vid"]).select(
+        "a", "b", "sig_a", F.col("_vsig").alias("sig_b")
+    )
     return (
-        cand_df.join(sa, "a")
-        .join(sb, "b")
-        .withColumn("similarity", sim("sig_a", "sig_b"))
+        j2.withColumn("similarity", sig_similarity_expr("sig_a", "sig_b"))
         .where(F.col("similarity") >= F.lit(threshold))
         .select("a", "b", "similarity")
     )
@@ -482,6 +428,16 @@ def clusters_with_singletons(
     )
 
 
+def _query_signature(text: str, cfg: EngineConfig) -> np.ndarray:
+    """Driver-side signature of one query text: normalize → gates →
+    shingle → minhash, or the zero signature when gated out."""
+    norm = K.normalize_text(text)
+    if not K.passes_gates(norm, cfg.min_words, cfg.shingle_size):
+        return K.zero_signature(cfg.signature_size)
+    a, b = cfg.coefficients
+    return K.minhash_from_hashes(K.shingle_hashes_text(norm, cfg.shingle_size), a, b)
+
+
 def query_candidates(
     spark: SparkSession,
     query_texts: list[tuple[int, str]],
@@ -492,14 +448,8 @@ def query_candidates(
     """L6 query (index.cr:146-163): broadcast the ≤num_bands query band rows,
     equi-join the bands table, distinct. Returns (query_id, doc_id)."""
     rows = []
-    a, b = cfg.coefficients
     for qid, text in query_texts:
-        norm = K.normalize_text(text)
-        if K.passes_gates(norm, cfg.min_words, cfg.shingle_size):
-            h = K.shingle_hashes_text(norm, cfg.shingle_size)
-            sig = K.minhash_from_hashes(h, a, b)
-        else:
-            sig = K.zero_signature(cfg.signature_size)
+        sig = _query_signature(text, cfg)
         bh = K.band_hashes_batch(sig[None, :], cfg.num_bands, cfg.rows_per_band)[0].view(np.int64)
         for band_idx in range(cfg.num_bands):
             rows.append((qid, band_idx, int(bh[band_idx])))
@@ -524,22 +474,15 @@ def query_with_scores(
     S1 score → sort desc (+ optional spec'd max_candidates limit,
     openspec/specs/lsh-index/spec.md:20)."""
     cands = query_candidates(spark, query_texts, bands_df, cfg, id_col)
-    a, b = cfg.coefficients
-    qsigs = []
-    for qid, text in query_texts:
-        norm = K.normalize_text(text)
-        if K.passes_gates(norm, cfg.min_words, cfg.shingle_size):
-            h = K.shingle_hashes_text(norm, cfg.shingle_size)
-            sig = K.minhash_from_hashes(h, a, b)
-        else:
-            sig = K.zero_signature(cfg.signature_size)
-        qsigs.append((qid, K.signature_to_bytes(sig)))
-    qsig_df = spark.createDataFrame(qsigs, "query_id long, qsig binary")
-    sim = similarity_udf_binary()
+    qsigs = [
+        (qid, _query_signature(text, cfg).view(np.int32).tolist())
+        for qid, text in query_texts
+    ]
+    qsig_df = spark.createDataFrame(qsigs, "query_id long, qsig array<int>")
     scored = (
         cands.join(F.broadcast(qsig_df), "query_id")
-        .join(sig_df.select(id_col, "sig"), id_col)
-        .withColumn("score", sim("qsig", "sig"))
+        .join(sig_df.select(id_col, "sig_arr"), id_col)
+        .withColumn("score", sig_similarity_expr("qsig", "sig_arr"))
         .select("query_id", id_col, "score")
     )
     if max_candidates is not None:
@@ -556,25 +499,13 @@ def query_with_scores(
     return scored.orderBy(F.desc("score"), id_col)
 
 
-def sig_array_udf():
-    """pandas UDF binary LE-u32 blob → array<long> of signature values."""
-
-    @pandas_udf(ArrayType(LongType()))
-    def _to_array(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for blobs in it:
-            yield pd.Series(
-                [np.frombuffer(b, dtype="<u4").astype(np.int64) for b in blobs]
-            )
-
-    return _to_array
-
-
 def signature_slots(sig_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Exploded signature slots (doc_id, i, value) for non-zero signatures —
     the bit-exact correctness surface checked by the DuckDB oracle."""
     return (
         sig_df.where(~F.col("is_zero"))
-        .select(id_col, F.posexplode(sig_array_udf()(F.col("sig"))).alias("i", "value"))
+        .select(id_col, F.posexplode("sig_arr").alias("i", "value"))
+        .withColumn("value", F.col("value").cast("long").bitwiseAND(0xFFFFFFFF))
     )
 
 

@@ -9,7 +9,7 @@ these become Iceberg tables (``writeTo(...).createOrReplace()``) — the stage
 protocol (write → _SUCCESS marker → skip-if-present) is identical.
 
 Stages:
-  1. signatures   docs → (doc_id, sig, bands, is_zero, n_shingles)
+  1. signatures   docs → (doc_id, sig_arr, bands, is_zero, n_shingles)
   2. bands        posexplode, zero-sig quarantined
   3. candidates   LSH bucket self-join, hot buckets capped
   4. verified     similarity >= threshold
@@ -55,9 +55,9 @@ class DedupPipeline:
         the cluster join read signatures by id, so with a bucketed
         checkpoint Catalyst elides the signature-side exchange entirely —
         only the thin (a, b) pair list shuffles.  At 10^12 rows the
-        signature payload (~0.5 KB/row) is the table that must never
-        move; this is the cluster-native layout (Iceberg: a bucket
-        partition transform on the id column).  Plan-asserted in
+        signature payload (~0.55 KB/row of parquet) is the table that
+        must never move; this is the cluster-native layout (Iceberg: a
+        bucket partition transform on the id column).  Plan-asserted in
         tests/test_plans.py."""
         self.spark = spark
         self.cfg = cfg

@@ -84,7 +84,7 @@ class TestStopWords:
         )
         row = ops.with_signatures(df, cfg).head()
         exp = O.oracle_signature("quick brown fox jumps over lazy dog", AO, BO, 5, 4)
-        assert np.frombuffer(row.sig, dtype="<u4").tolist() == exp
+        assert np.asarray(row.sig_arr, np.int32).view(np.uint32).tolist() == exp
 
     def test_stop_words_can_gate_out(self):
         cfg = EngineConfig(seed=12345, stop_words=("the", "lazy", "dog"))
@@ -153,7 +153,8 @@ class TestSerializationTwins:
 
         sig = api.compute_signature("The quick brown fox jumps over the lazy dog", cfg=CFG)
         le = K.signature_to_bytes(sig)
-        native = K.signature_to_bytes_native(sig)
+        # the reference's Signature#to_blob writes native-endian uint32s
+        native = np.ascontiguousarray(sig, dtype=np.uint32).tobytes()
         if sys.byteorder == "little":  # every Spark deployment target
             assert native == le
         assert K.bytes_to_signature(le).tolist() == sig.tolist()

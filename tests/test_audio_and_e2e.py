@@ -181,12 +181,12 @@ class TestAudioNearDup:
         clips, _ = synth.clips_spark_df(spark, n_clips=20, seed=5)
         sig = with_audio_signatures(clips, CFG)
         assert set(sig.columns) == {
-            "clip_id", "sig", "sig_arr", "bands", "is_zero", "n_shingles"
+            "clip_id", "sig_arr", "bands", "is_zero", "n_shingles"
         }
         rows = sig.collect()
         assert len(rows) == 20
         for r in rows:
-            assert len(r.sig) == CFG.signature_size * 4
+            assert len(r.sig_arr) == CFG.signature_size
             assert len(r.bands) == CFG.num_bands
             if r.is_zero:
                 assert r.n_shingles == 0

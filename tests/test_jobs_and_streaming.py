@@ -189,7 +189,7 @@ class TestStreamingIngest:
                     **{r.doc_id: r.text for r in docs2.collect()}}
         for d, text in all_docs.items():
             exp = O.oracle_signature(text, ao, bo, 5, 4)
-            assert np.frombuffer(rows[d].sig, dtype="<u4").tolist() == exp
+            assert np.asarray(rows[d].sig_arr, np.int32).view(np.uint32).tolist() == exp
 
     def test_foreach_batch_candidates(self, spark, tmp_path):
         bands_acc = str(tmp_path / "bands_acc")

@@ -26,6 +26,7 @@ DOCS = [
     (8, ""),
     (9, "Document number nine with some shared terms"),
 ]
+QUERY = "apple banana orange fruit salad recipe with apple and banana"
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +44,7 @@ class TestSignatureStage:
         rows = {r.doc_id: r for r in sig_df.collect()}
         for doc_id, text in DOCS:
             exp = O.oracle_signature(text, AO, BO, 5, 4)
-            got = np.frombuffer(rows[doc_id].sig, dtype="<u4").tolist()
+            got = np.asarray(rows[doc_id].sig_arr, np.int32).view(np.uint32).tolist()
             assert got == exp, doc_id
 
     def test_bands_match_oracle(self, sig_df):
@@ -196,23 +197,27 @@ class TestQueries:
         assert {1, 2} <= got
 
     def test_query_with_scores_sorted(self, spark, sig_df):
+        # query 1 scores near-dups below 1.0 (docs 1 and 2), so the exact
+        # comparison below covers fractional scores too
+        queries = [(0, QUERY), (1, "Technology company announces revolutionary new smartphone")]
         bands = ops.bands_table(sig_df)
-        scored = ops.query_with_scores(
-            spark,
-            [(0, "apple banana orange fruit salad recipe with apple and banana")],
-            bands,
-            sig_df,
-            CFG,
-        ).collect()
+        scored = ops.query_with_scores(spark, queries, bands, sig_df, CFG).collect()
         scores = [r.score for r in scored]
         assert scores == sorted(scores, reverse=True)
         assert scored[0].score == 1.0  # exact match present (docs 4, 5)
+        assert any(0.0 < s < 1.0 for s in scores)
+        # every score is exactly the S1 similarity of the oracle signatures
+        texts, qtexts = dict(DOCS), dict(queries)
+        for r in scored:
+            qsig = np.array(O.oracle_signature(qtexts[r.query_id], AO, BO, 5, 4), dtype=np.uint32)
+            dsig = np.array(O.oracle_signature(texts[r.doc_id], AO, BO, 5, 4), dtype=np.uint32)
+            assert r.score == K.signature_similarity(qsig, dsig), (r.query_id, r.doc_id)
 
     def test_max_candidates_limit(self, spark, sig_df):
         bands = ops.bands_table(sig_df)
         scored = ops.query_with_scores(
             spark,
-            [(0, "apple banana orange fruit salad recipe with apple and banana")],
+            [(0, QUERY)],
             bands,
             sig_df,
             CFG,

@@ -123,6 +123,23 @@ class TestStagePlans:
         assert "LeftAnti" in plan, plan
         assert plan.index("collect_list") < plan.index("LeftAnti"), plan
 
+    def test_slots_and_scored_query_are_pure_sql(self, spark, docs):
+        # the slot dump and the scored query read sig_arr in SQL: every
+        # ArrowEvalPython left in their plans is the cached signature lineage
+        sig = ops.with_signatures(docs, CFG).cache()
+        try:
+            sig.count()
+            scored = ops.query_with_scores(
+                spark, [(0, "the quick brown fox jumps over it")],
+                ops.bands_table(sig), sig, CFG,
+            )
+            for df in (ops.signature_slots(sig), scored):
+                plan = plan_of(df)
+                assert plan.count("ArrowEvalPython") == plan.count("InMemoryRelation"), plan
+                assert "BatchEvalPython" not in plan
+        finally:
+            sig.unpersist()
+
     def test_query_uses_broadcast_join(self, spark, docs):
         sig = ops.with_signatures(docs, CFG).cache()
         try:
