@@ -86,7 +86,7 @@ def _q_candidate_pairs_packed(spark, sf_dir):
     this query is a per-round proof of the pack's soundness at this SF."""
     bands = ops.bands_table(_sigs(spark, sf_dir))
     packed = bands.select("doc_id", ops.pack_band_key().alias("band_key"))
-    return ops.candidate_pairs_grouped(
+    return ops.candidate_pairs(
         packed, max_bucket_size=10_000, key_cols=("band_key",)
     )
 
@@ -124,10 +124,11 @@ def _q_simhash_pairs(spark, sf_dir):
 
     sim = with_simhash(_docs(spark, sf_dir), CFG)
     # capped headline path (round-2 verdict item #3): the cap is applied as
-    # a count + broadcast anti-join BEFORE the block self-join and is
-    # non-binding at every sf fixture (max block bucket ≤ 13 even at 50k
-    # docs), so the result is identical to the uncapped brute-force DuckDB
-    # twin while the plan of record carries the skew guard
+    # a count + broadcast anti-join BEFORE the grouped block pairing
+    # (ops.bucket_pairs) and is non-binding at every sf fixture (max block
+    # bucket ≤ 13 even at 50k docs), so the result is identical to the
+    # uncapped brute-force DuckDB twin while the plan of record carries the
+    # skew guard
     return simhash_candidate_pairs(sim, max_hamming=3, max_bucket_size=10_000).select(
         "a", "b", "hamming"
     )
@@ -191,7 +192,8 @@ def _q_embedding_ann(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     dim = len(emb.select("embedding").head().embedding)
     # hot-bucket cap in the plan of record (count + broadcast anti-join
-    # BEFORE the bucket self-join, like every other candidate family):
+    # BEFORE the grouped bucket pairing, ops.bucket_pairs, like every other
+    # candidate family):
     # non-binding at every sf fixture (max bucket = 5 at sf0.01), so the
     # result is identical to the uncapped DuckDB twin while the skew guard
     # is what actually executes

@@ -106,7 +106,7 @@ def main() -> None:
     # absorbed by the exact verify (ops.pack_band_key) — pair/cluster
     # counts are unchanged
     packed = bands.select("doc_id", ops.pack_band_key().alias("band_key"))
-    cands = ops.candidate_pairs_grouped(
+    cands = ops.candidate_pairs(
         packed, max_bucket_size=10_000, key_cols=("band_key",)
     )
     # persist the edge list: connected_components runs a size probe AND a
@@ -128,10 +128,11 @@ def main() -> None:
 
     t0 = time.monotonic()
     sim = with_simhash(docs, CFG)
-    # hot-block cap in the headline path (count + anti-join BEFORE the block
-    # self-join): non-binding on this corpus (max block bucket = 13 at 50k
-    # clips), so the pair count is identical to uncapped — the cap exists to
-    # quarantine a constant block key across templated docs at 100 TB
+    # hot-block cap in the headline path (count + anti-join BEFORE the
+    # grouped block pairing): non-binding on this corpus (max block bucket
+    # = 13 at 50k clips), so the pair count is identical to uncapped — the
+    # cap exists to quarantine a constant block key across templated docs
+    # at 100 TB
     caches: list = []
     n_sim_pairs = simhash_candidate_pairs(
         sim, max_hamming=3, max_bucket_size=10_000, cache_handle=caches

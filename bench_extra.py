@@ -71,7 +71,7 @@ def profile_dedup(spark):
         bands = ops.bands_table(sig).persist()
         noop(bands)
     packed = bands.select("doc_id", ops.pack_band_key().alias("band_key"))
-    cands = ops.candidate_pairs_grouped(
+    cands = ops.candidate_pairs(
         packed, max_bucket_size=10_000, key_cols=("band_key",)
     )
     with phase(spark, "dedup/cands_noop"):

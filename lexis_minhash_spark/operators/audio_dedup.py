@@ -193,12 +193,13 @@ def audio_near_dup_pairs(
     text default b=20/r=5 (t ≈ 0.55) would silently drop ~half the
     candidates at s ≈ 0.5."""
     cfg = cfg or EngineConfig(seed=12345, num_bands=50)
-    # persist: the signature table feeds the bands explode AND both sides
-    # of the verify join — unpersisted, the decode+fingerprint UDF would
-    # execute three times.  The result is eagerly localCheckpoint'ed so the
-    # cache can be released before returning (round-2 advice: repeated
-    # calls in a long-lived session must not accumulate cached blocks);
-    # the returned pair list is small and reusable without recomputation.
+    # persist (eager and lazy alike): the signature table feeds the bands
+    # explode AND both sides of the verify join — unpersisted, the
+    # decode+fingerprint UDF would execute three times.  The eager result
+    # is localCheckpoint'ed so the cache can be released before returning
+    # (round-2 advice: repeated calls in a long-lived session must not
+    # accumulate cached blocks); the returned pair list is small and
+    # reusable without recomputation.
     sig = with_audio_signatures(
         clips, cfg, id_col=id_col, frame_ms=frame_ms, window_frames=window_frames
     )
@@ -216,39 +217,20 @@ def audio_near_dup_pairs(
     width = clips.sparkSession.sparkContext.defaultParallelism
     sig = sig.coalesce(max(width, n_parts // 4)).select(
         id_col, "sig_arr", "bands", "is_zero"
+    ).persist()
+    bands = ops.bands_table(sig, id_col=id_col)
+    # packed 64-bit band key for the candidate shuffle (merge-only
+    # collisions absorbed by the exact verify — ops.pack_band_key)
+    packed = bands.select(F.col(id_col), ops.pack_band_key().alias("band_key"))
+    cands = ops.candidate_pairs(
+        packed, id_col=id_col, max_bucket_size=max_bucket_size, key_cols=("band_key",)
     )
+    pairs = ops.verified_pairs(cands, sig, threshold, id_col=id_col)
     if not materialize:
-        # lazy: persist (NOT localCheckpoint — lineage retained, so lost
-        # blocks recompute on a cluster) and leave the cache to the caller/
-        # session to release; the signature table feeds the bands explode
-        # AND both verify-join sides, so an unpersisted plan would decode
-        # the corpus three times
-        sig = sig.persist()
-        bands = ops.bands_table(sig, id_col=id_col)
-        # packed 64-bit band key for the candidate shuffle (merge-only
-        # collisions absorbed by the exact verify — ops.pack_band_key)
-        packed = bands.select(F.col(id_col), ops.pack_band_key().alias("band_key"))
-        cands = (
-            ops.candidate_pairs_grouped(packed, id_col=id_col,
-                                        max_bucket_size=max_bucket_size,
-                                        key_cols=("band_key",))
-            if max_bucket_size is not None
-            else ops.candidate_pairs(bands, id_col=id_col)
-        )
-        return ops.verified_pairs(cands, sig, threshold, id_col=id_col)
-    sig = sig.persist()
+        # lazy: the cache (NOT localCheckpoint — lineage retained, so lost
+        # blocks recompute on a cluster) is left to the caller/session
+        return pairs
     try:
-        bands = ops.bands_table(sig, id_col=id_col)
-        # packed 64-bit band key for the candidate shuffle (merge-only
-        # collisions absorbed by the exact verify — ops.pack_band_key)
-        packed = bands.select(F.col(id_col), ops.pack_band_key().alias("band_key"))
-        cands = (
-            ops.candidate_pairs_grouped(packed, id_col=id_col,
-                                        max_bucket_size=max_bucket_size,
-                                        key_cols=("band_key",))
-            if max_bucket_size is not None
-            else ops.candidate_pairs(bands, id_col=id_col)
-        )
-        return ops.verified_pairs(cands, sig, threshold, id_col=id_col).localCheckpoint()
+        return pairs.localCheckpoint()
     finally:
         sig.unpersist()

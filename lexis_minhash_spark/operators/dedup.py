@@ -24,6 +24,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from lexis_minhash_spark import kernels as K
+from lexis_minhash_spark import ops
 from lexis_minhash_spark.functions.similarity import cosine_expr, jaccard_expr
 
 
@@ -216,24 +217,21 @@ def simhash_candidate_pairs(
 ) -> DataFrame:
     """Hamming-near pairs: split each fingerprint into ``num_blocks`` 16-bit
     block keys; docs within Hamming distance ``num_blocks - 1`` share at
-    least one block (pigeonhole).  Candidates meet per block (grouped
-    in-bucket expansion in the capped path, equi-join in the uncapped
-    path), then exact popcount filter JVM-side via bit_count(xor).
-    Returns (a, b, hamming).
+    least one block (pigeonhole).  Candidates meet per block
+    (``ops.bucket_pairs``, carrying the fingerprint), then exact popcount
+    filter JVM-side via bit_count(xor).  Returns (a, b, hamming).
 
     Zero fingerprints (gated-out/empty docs) are quarantined — they would
     all pair with each other at distance 0 and form the hottest block
     buckets (same rationale as the zero-signature quarantine).
 
     ``max_bucket_size`` quarantines pathological hot block keys (e.g. a
-    constant fingerprint nibble across templated docs) with a broadcast
-    anti-join before the self-join — a capped bucket of size m would
-    otherwise contribute m² join rows; genuinely-near pairs in a capped
-    bucket still meet on one of their other blocks unless every shared
-    block is hot.
+    constant fingerprint nibble across templated docs; strategy and cap in
+    ``ops.bucket_pairs``); genuinely-near pairs in a capped bucket still
+    meet on one of their other blocks unless every shared block is hot.
 
     In the capped path the (id, simhash) table is persisted: the hot-count
-    pass and the block join would otherwise BOTH recompute the simhash
+    pass and the grouped pass would otherwise BOTH recompute the simhash
     UDF lineage (the same pay-twice shape as the round-3 ngram
     regression).  The narrow fingerprint table — not the 4×-exploded
     block table — is what's cached; the posexplode re-runs from cache.
@@ -245,15 +243,15 @@ def simhash_candidate_pairs(
     # project to the two columns every downstream consumer uses BEFORE the
     # zero filter / persist: with_simhash output carries the text column,
     # which would otherwise be cached (and re-scanned by the hot-count and
-    # join passes) for nothing — guide §2.3, project before the exchange
+    # grouped passes) for nothing — guide §2.3, project before the exchange
     sim_df = sim_df.select(F.col(id_col), F.col("simhash")).where(
         F.col("simhash") != 0
     )
     if max_bucket_size is not None:
         # fan the persisted fingerprint table in 4:1 (floored at cluster
         # width, shuffle-free): the input partitioning is sized for the
-        # fingerprint UDF's CPU parallelism, but three downstream cache
-        # scans (hot count + both join legs) pay per-task overhead on a
+        # fingerprint UDF's CPU parallelism, but both downstream cache
+        # scans (hot count + grouped pass) pay per-task overhead on a
         # 16-byte-per-row table (same rationale + measurement as
         # audio_near_dup_pairs's signature cache fan-in)
         cluster_width = sim_df.sparkSession.sparkContext.defaultParallelism
@@ -276,57 +274,11 @@ def simhash_candidate_pairs(
             )
         ).alias("block_idx", "block_key"),
     )
-    if max_bucket_size is not None:
-        hot = (
-            blocks.groupBy("block_idx", "block_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > max_bucket_size)
-            .select("block_idx", "block_key")
-        )
-        blocks = blocks.join(F.broadcast(hot), ["block_idx", "block_key"], "left_anti")
-        # grouped in-bucket expansion (the candidate_pairs_grouped shape):
-        # ONE exchange of the block table (collect per bucket, bucket size
-        # bounded by the cap just applied) instead of two self-join legs —
-        # the hamming popcount runs inside the expansion so only surviving
-        # pairs reach the distinct.  Measured on the 50k-doc bench corpus:
-        # 4.21 s -> 3.43 s end-to-end, identical pair set (exceptAll = 0).
-        # Only the CAPPED path groups: an uncapped pathological block would
-        # materialize its whole member array in one task, so the uncapped
-        # exact-recall path below keeps the array-free self-join.
-        grouped = (
-            blocks.groupBy("block_idx", "block_key")
-            .agg(
-                F.collect_list(
-                    F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("s"))
-                ).alias("ms")
-            )
-            .where(F.size("ms") >= 2)
-        )
-        return (
-            grouped.select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ms, (x, i) ->"
-                        " transform(slice(ms, i + 2, size(ms) - i - 1), y ->"
-                        " struct(least(x.i, y.i) as a, greatest(x.i, y.i) as b,"
-                        " bit_count(x.s ^ y.s) as hamming))))"
-                    )
-                ).alias("p")
-            )
-            .select("p.a", "p.b", "p.hamming")
-            .where(F.col("hamming") <= max_hamming)
-            .distinct()
-        )
-    left = blocks.select(
-        "block_idx", "block_key", F.col(id_col).alias("a"), F.col("simhash").alias("sim_a")
-    )
-    right = blocks.select(
-        "block_idx", "block_key", F.col(id_col).alias("b"), F.col("simhash").alias("sim_b")
-    )
     return (
-        left.join(right, ["block_idx", "block_key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"))
+        ops.bucket_pairs(
+            blocks, ["block_idx", "block_key"], id_col, max_bucket_size, carry="simhash"
+        )
+        .select("a", "b", F.bit_count(F.col("ca").bitwiseXOR(F.col("cb"))).alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -366,17 +318,11 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact word-n-gram Jaccard pairs ≥ threshold.
 
-    Posting-list formulation: explode distinct grams, a groupBy(gram)
-    shuffle builds sorted posting lists, pairs are emitted by in-bucket
-    expansion (the same pattern as candidate_pairs_grouped — no self-join
-    of the gram table).  Grams with document frequency above
-    ``max_doc_freq`` are quarantined (they cannot be discriminative and are
-    the skew hotspot — an uncapped hot gram of df=m contributes m² pair
-    rows).  The cap runs BEFORE the array aggregation: a count-only
-    groupBy(gram) (partial-aggregates map-side) finds hot grams, and a
-    broadcast anti-join drops their rows ahead of the ``collect_set`` —
-    a pathological posting list (stopword trigram across 10^8 boilerplate
-    docs) is never materialized in any task (round-2 verdict item #1).
+    Posting-list formulation: explode distinct grams, pair the docs of
+    each gram (``ops.bucket_pairs``: strategy and cap there), count shared
+    grams per pair.  Grams with document frequency above ``max_doc_freq``
+    are quarantined (they cannot be discriminative and are the skew
+    hotspot — an uncapped hot gram of df=m contributes m² pair rows).
 
     CAP SEMANTICS (conservative, round-2 advice): denominators na/nb are
     the FULL per-doc distinct-gram counts computed BEFORE the cap, so the
@@ -403,11 +349,11 @@ def ngram_jaccard_pairs(
     action, or `spark.catalog.clearCache()` between jobs
     (see _persist_tracked).
 
-    Shuffle census: denominators groupBy(id) [none — map-side
-    size(array_distinct)]; hot-gram count groupBy(gram) [1, capped path
-    only — partial agg, tiny]; posting-list groupBy(gram) [2]; pair agg
-    [3]; two joins of the small aggregated pair table against the per-doc
-    count table.  Entirely SQL/codegen — no Python in the pipeline."""
+    Shuffle census (capped): denominators groupBy(id) [none — map-side
+    size(array_distinct)]; hot-gram count groupBy(gram) [1 — partial agg,
+    tiny]; posting-list groupBy(gram) [2]; pair agg [3]; two joins of the
+    small aggregated pair table against the per-doc count table.
+    Entirely SQL/codegen — no Python in the pipeline."""
     toks = df.select(
         F.col(id_col),
         F.expr(f"split(trim(lower({text_col})), '\\\\s+')").alias("_w"),
@@ -440,40 +386,18 @@ def ngram_jaccard_pairs(
     n_df = toks.select(
         F.col(id_col), F.coalesce(F.size(gram_arr), F.lit(0)).alias("n_grams")
     )
-    kept = ex
     if max_doc_freq is not None:
-        # two consumers below (hot count + anti-join) — persist so the
-        # split/transform/explode pipeline runs once (see docstring)
+        # two consumers in the capped path (hot count + anti-join) —
+        # persist so the split/transform/explode pipeline runs once (see
+        # docstring)
         if materialize_path is not None:
             ex = _materialize_parquet(ex, materialize_path)
         else:
             ex = _persist_tracked(ex, cache_handle)
-        hot = (
-            ex.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("gram")
-        )
-        kept = ex.join(F.broadcast(hot), "gram", "left_anti")
-    # collect_list + least/greatest pair normalization (not collect_set +
-    # sort_array): `ex` is distinct per (gram, doc) by construction (explode
-    # of array_distinct), so the per-key set dedup and sort are pure
-    # overhead; each i<j position pair is one shared gram either way, so
-    # the per-pair `inter` counts are unchanged (same rationale + measured
-    # win as ops.candidate_pairs_grouped).
-    pl = kept.groupBy("gram").agg(F.collect_list(F.col(id_col)).alias("ids"))
+    # one row per shared gram: `ex` is distinct per (gram, doc) by
+    # construction (explode of array_distinct)
     pairs = (
-        pl.where(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) ->"
-                    " transform(slice(ids, i + 2, size(ids) - i - 1), y ->"
-                    " struct(least(x, y) as a, greatest(x, y) as b))))"
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        ops.bucket_pairs(ex, ["gram"], id_col, max_doc_freq)
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
@@ -615,9 +539,8 @@ def lsh_bucketed_cosine_pairs(
     oracle) and multiply-free.  ``method='gaussian'`` keeps the classic
     float32 Gaussian planes.
 
-    ``max_bucket_size`` quarantines pathological hot buckets BEFORE the
-    self-join (count-only groupBy + broadcast anti-join — the same pattern
-    as every other candidate family).  Default is ``None`` (uncapped —
+    ``max_bucket_size`` quarantines pathological hot buckets (strategy
+    and cap in ``ops.bucket_pairs``).  Default is ``None`` (uncapped —
     exact LSH-candidate recall, matching this function's pre-round-4
     semantics; round-4 advice: a silent default cap loses genuinely-near
     pairs whose every shared bucket is hot).  Scale callers should pass an
@@ -625,12 +548,12 @@ def lsh_bucketed_cosine_pairs(
     10_000.  With only 2^n_planes buckets per
     table, a dense embedding region — or a degenerate cohort of all-zero /
     constant vectors, which lands in bucket 0 of EVERY table — would
-    otherwise contribute m² join rows inside one partition.  A capped
+    otherwise contribute m² pair rows inside one partition.  A capped
     bucket's genuinely-near pairs still meet in one of the other
     ``n_tables - 1`` tables unless every one of their shared buckets is
     hot.
 
-    Shuffle discipline: the bucket join and the pair dedup move ONLY
+    Shuffle discipline: the bucket pairing and the pair dedup move ONLY
     (table_idx, bucket, id) — embedding vectors are re-joined per side
     after the distinct, so the wide array column is never carried through
     the candidate shuffles."""
@@ -653,28 +576,16 @@ def lsh_bucketed_cosine_pairs(
     )
     if max_bucket_size is not None:
         # persist the narrow (id, table_idx, bucket) table: the hot-count
-        # pass and the anti-join would otherwise both recompute the
+        # pass and the grouped pass would otherwise both recompute the
         # n_tables bucket UDFs (pay-twice, as in the round-3 ngram case).
         # Cache lifetime: see _persist_tracked / cache_handle.
         if materialize_path is not None:
             tagged = _materialize_parquet(tagged, materialize_path)
         else:
             tagged = _persist_tracked(tagged, cache_handle)
-        hot = (
-            tagged.groupBy("table_idx", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > max_bucket_size)
-            .select("table_idx", "bucket")
-        )
-        tagged = tagged.join(F.broadcast(hot), ["table_idx", "bucket"], "left_anti")
-    a = tagged.select("table_idx", "bucket", F.col(id_col).alias("a"))
-    b = tagged.select("table_idx", "bucket", F.col(id_col).alias("b"))
-    cand_ids = (
-        a.join(b, ["table_idx", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    cand_ids = ops.bucket_pairs(
+        tagged, ["table_idx", "bucket"], id_col, max_bucket_size
+    ).distinct()
     va = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"))
     vb = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"))
     return (

@@ -15,7 +15,7 @@ Scale notes (100 TB design point):
   blocked NumPy (kernels.minhash_batch) — no per-row Python
 - zero signatures are quarantined BEFORE banding: every gated-out doc shares
   the identical band hashes, which would create the worst possible skew in
-  the self-join (engine/signature.cr:13-16 + engine.cr:443-456)
+  candidate generation (engine/signature.cr:13-16 + engine.cr:443-456)
 - hot buckets are capped (quarantined + surfaced in metrics) and AQE skew
   join handles the residual tail
 - candidate pair dedup happens BEFORE the similarity verify join (the
@@ -158,53 +158,12 @@ def bands_table(sig_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def candidate_pairs(
-    bands_df: DataFrame,
-    id_col: str = "doc_id",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """LSH candidate pairs via bucket self-join (L9, index.cr:195-217).
-
-    (a, b) with a < b, distinct. ``max_bucket_size`` quarantines pathological
-    hot buckets (their members collide on *some other* band with anything
-    genuinely similar; a capped bucket of size m would contribute m^2 pairs).
-
-    CONTRACT: ``bands_df`` must be distinct per (band_idx, band_hash,
-    doc_id) — ``bands_table`` guarantees this by construction (one
-    posexplode row per (doc, band_idx)).  The hot-bucket count is a raw
-    row count (cheap map-side partial agg); a caller-supplied bands table
-    with duplicate rows would both over-count buckets toward the cap and
-    emit duplicate pairs into the distinct (round-3 advice: dedupe such
-    input first rather than paying a countDistinct expansion here)."""
-    b = bands_df
-    if max_bucket_size is not None:
-        hot = (
-            b.groupBy("band_idx", "band_hash")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > max_bucket_size)
-            .select("band_idx", "band_hash")
-        )
-        b = b.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-    left = b.select(
-        F.col("band_idx"), F.col("band_hash"), F.col(id_col).alias("a")
-    )
-    right = b.select(
-        F.col("band_idx"), F.col("band_hash"), F.col(id_col).alias("b")
-    )
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
 def pack_band_key(
     band_idx_col: str = "band_idx", band_hash_col: str = "band_hash"
 ) -> Column:
     """Pack (band_idx:int, band_hash:long) into ONE 64-bit exchange key.
 
-    The grouped candidate shuffle otherwise carries a 12-byte composite key
+    The candidate shuffle otherwise carries a 12-byte composite key
     per band row; at 10^12 clips × num_bands rows the key bytes dominate
     the candidate exchange (round-4 verdict item #1: the cand-reduce
     exchange volume gates whole-job scaling).  ``xxhash64(band_idx,
@@ -220,71 +179,111 @@ def pack_band_key(
     return F.xxhash64(F.col(band_idx_col), F.col(band_hash_col))
 
 
-def candidate_pairs_grouped(
+def hot_buckets(
+    df: DataFrame, keys: list[str] | tuple[str, ...], max_bucket_size: int
+) -> DataFrame:
+    """The ``keys`` of the buckets of ``df`` holding more than
+    ``max_bucket_size`` rows.  A count-only groupBy: it partial-aggregates
+    map-side, so a hot key never concentrates its rows in one task."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") > max_bucket_size)
+        .select(*keys)
+    )
+
+
+def bucket_pairs(
+    df: DataFrame,
+    keys: list[str] | tuple[str, ...],
+    id_col: str = "doc_id",
+    max_bucket_size: int | None = None,
+    carry: str | None = None,
+) -> DataFrame:
+    """Pair the members of each bucket (find_similar_pairs,
+    index.cr:195-217): one row (a, b) per bucket and unordered pair of
+    distinct ids, with a < b and no dedup across buckets.  With ``carry``,
+    also (ca, cb): the ``carry`` column of a and of b.  Every candidate
+    family (MinHash bands, SimHash blocks, n-gram posting lists, ANN
+    buckets) builds its pairs here.
+
+    Two physical strategies:
+    - capped (``max_bucket_size`` set): buckets with more rows than the cap
+      are quarantined (``hot_buckets`` + broadcast anti-join), THEN each
+      bucket is grouped with ``collect_list`` and expanded in SQL — one
+      exchange of ``df`` instead of two self-join legs (measured 2.95 s vs
+      5.84 s on the 50k-clip bench candidates).  The cap runs BEFORE the
+      aggregate, so a pathological bucket's member array (a 10^7-member
+      boilerplate key at 100 TB) is never built in any task.
+    - uncapped: equi-join of ``df`` with itself on ``keys``, no array, so
+      an unbounded bucket never has to fit in one task.
+
+    CONTRACT: ``df`` is distinct per (keys, id).  The cap counts raw rows,
+    so duplicated rows would push under-cap buckets over it (dedupe such
+    input first rather than paying a countDistinct exchange here).
+    ``collect_list`` rather than ``collect_set`` + ``sort_array`` for the
+    same reason: pair order is normalized per pair instead (3.63 s → 2.95 s
+    on the bench candidate subtree, identical pairs).  A repeated id in one
+    bucket (e.g. a packed-key collision between two bands of one doc)
+    yields no (x, x) pair: a < b is strict."""
+    keys = list(keys)
+    extra = ["ca", "cb"] if carry else []
+    if max_bucket_size is None:
+        def side(i, c):
+            return df.select(
+                *keys, F.col(id_col).alias(i), *([F.col(carry).alias(c)] if carry else [])
+            )
+
+        return (
+            side("a", "ca").join(side("b", "cb"), keys)
+            .where(F.col("a") < F.col("b"))
+            .select("a", "b", *extra)
+        )
+    df = df.join(F.broadcast(hot_buckets(df, keys, max_bucket_size)), keys, "left_anti")
+    if carry:
+        member = F.struct(F.col(id_col).alias("i"), F.col(carry).alias("c"))
+        pair = ("if(x.i < y.i, struct(x.i as a, y.i as b, x.c as ca, y.c as cb),"
+                " struct(y.i as a, x.i as b, y.c as ca, x.c as cb))")
+    else:
+        member = F.col(id_col)
+        pair = "struct(least(x, y) as a, greatest(x, y) as b)"
+    grouped = (
+        df.groupBy(*keys)
+        .agg(F.collect_list(member).alias("ms"))
+        .where(F.size("ms") >= 2)
+    )
+    return (
+        grouped.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ms, (x, i) ->"
+                    " transform(slice(ms, i + 2, size(ms) - i - 1), y -> "
+                    + pair + ")))"
+                )
+            ).alias("p")
+        )
+        .select("p.*")
+        .where(F.col("a") < F.col("b"))
+    )
+
+
+def candidate_pairs(
     bands_df: DataFrame,
     id_col: str = "doc_id",
-    max_bucket_size: int | None = 1000,
+    max_bucket_size: int | None = None,
     key_cols: tuple[str, ...] = ("band_idx", "band_hash"),
 ) -> DataFrame:
-    """Alternative candidate generation: group each bucket, emit its id
-    combinations (normalized a < b per pair) with a SQL ``transform`` (no
-    self-join of the bands table).
+    """LSH candidate pairs (L9, index.cr:195-217): distinct (a, b), a < b,
+    sharing at least one band bucket — ``bucket_pairs(...).distinct()``
+    (strategy, cap and input contract there).  A capped bucket's members
+    still meet on any other band they share.
 
-    The hot-bucket cap runs BEFORE the array aggregation: a count-only
-    groupBy (partial-aggregates map-side, so the hot key never concentrates
-    rows in one task) finds over-cap buckets, and a broadcast anti-join
-    drops their rows ahead of the ``collect_set`` — the id array for a
-    pathological bucket (10^7-member boilerplate key at 100 TB) is never
-    materialized in any task.  Filtering AFTER the collect_set would OOM the
-    one reduce task that accumulated it (round-2 verdict item #1).
-
-    CONTRACT: ``bands_df`` must be distinct per (band_idx, band_hash,
-    doc_id) — true for ``bands_table`` output by construction.  The
-    count-only cap aggregate counts raw rows; duplicated input rows would
-    skew it toward quarantining under-cap buckets (round-3 advice —
-    documented contract instead of a countDistinct, which would add a
-    second full exchange on (band, doc) just to guard an input shape no
-    internal caller produces).
-
-    ``key_cols`` selects the bucket identity for the exchange: the default
-    composite (band_idx, band_hash) is bit-exact; scale callers pre-pack
-    it into one 64-bit column with ``pack_band_key`` and pass
-    ``key_cols=("band_key",)`` — the grouped shuffle then carries a single
-    long per row (see pack_band_key for why collisions are sound)."""
-    b = bands_df
-    keys = list(key_cols)
-    if max_bucket_size is not None:
-        hot = (
-            b.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") > max_bucket_size)
-            .select(*keys)
-        )
-        b = b.join(F.broadcast(hot), keys, "left_anti")
-    # collect_list, not collect_set + sort_array: the input is distinct per
-    # (bucket, doc) by CONTRACT, so the set dedup (a per-key hash set in
-    # ObjectHashAggregate) and the sort buy nothing — pair order is
-    # normalized per pair with least/greatest instead, and the trailing
-    # distinct dedups across buckets as before.  Measured on the 50k-clip
-    # bench corpus (1M band rows): 3.63 s → 2.95 s for the candidate
-    # subtree, identical pair set (exceptAll both ways = 0).
-    grouped = (
-        b.groupBy(*keys)
-        .agg(F.collect_list(id_col).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) ->"
-                " transform(slice(ids, i + 2, size(ids) - i - 1), y ->"
-                " struct(least(x, y) as a, greatest(x, y) as b))))"
-            )
-        ).alias("p")
-    ).select("p.a", "p.b")
-    # strict a < b: a packed-key collision between two of ONE doc's bands
-    # puts that doc twice in a bucket, which would otherwise emit (x, x)
-    return pairs.where(F.col("a") < F.col("b")).distinct()
+    ``key_cols`` is the bucket identity: the default composite
+    (band_idx, band_hash) is bit-exact; scale callers pre-pack it into one
+    64-bit column with ``pack_band_key`` and pass ``key_cols=("band_key",)``,
+    so the candidate shuffle carries a single long per row (see
+    pack_band_key for why collisions are sound)."""
+    return bucket_pairs(bands_df, key_cols, id_col, max_bucket_size).distinct()
 
 
 def verified_pairs(

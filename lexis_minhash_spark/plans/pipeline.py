@@ -11,7 +11,7 @@ protocol (write → _SUCCESS marker → skip-if-present) is identical.
 Stages:
   1. signatures   docs → (doc_id, sig_arr, bands, is_zero, n_shingles)
   2. bands        posexplode, zero-sig quarantined
-  3. candidates   LSH bucket self-join, hot buckets capped
+  3. candidates   pairs within each LSH bucket, hot buckets capped
   4. verified     similarity >= threshold
   5. clusters     connected components + singletons
 """
@@ -245,13 +245,9 @@ class DedupPipeline:
         )
         cands = self._run_stage(
             "candidates",
-            lambda: (
-                ops.candidate_pairs_grouped(
-                    packed, id_col=id_col, max_bucket_size=self.max_bucket_size,
-                    key_cols=("band_key",),
-                )
-                if self.max_bucket_size is not None
-                else ops.candidate_pairs(bands, id_col=id_col)
+            lambda: ops.candidate_pairs(
+                packed, id_col=id_col, max_bucket_size=self.max_bucket_size,
+                key_cols=("band_key",),
             ),
         )
         verified = self._run_stage(

@@ -68,27 +68,28 @@ def start_signature_sink(
     return writer.start()
 
 
-def _latest_counts_snapshot(spark, counts_path: str, before_batch: int):
-    """Largest ``snap_<id>`` dir under ``counts_path`` with id <
-    ``before_batch`` (strictly: a RETRIED micro-batch must not read its own
-    partially-written snapshot as the previous state).  Uses the Hadoop
-    FileSystem API so any scheme (file://, s3a://, ...) works."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(counts_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+def _fs(spark, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — any scheme (file://,
+    s3a://, ...) works."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _snapshot_ids(spark, counts_path: str) -> list[int]:
+    """Ids of the ``snap_<id>`` dirs under ``counts_path`` (none if it does
+    not exist)."""
+    fs, jpath = _fs(spark, counts_path)
     if not fs.exists(jpath):
-        return None
-    best = None
+        return []
+    ids = []
     for st in fs.listStatus(jpath):
         name = st.getPath().getName()
         if name.startswith("snap_"):
             try:
-                sid = int(name[5:])
+                ids.append(int(name[5:]))
             except ValueError:
                 continue
-            if sid < before_batch and (best is None or sid > best):
-                best = sid
-    return best
+    return ids
 
 
 def foreach_batch_candidates(
@@ -139,7 +140,7 @@ def foreach_batch_candidates(
     Structured Streaming (same batch_id) overwrites its own previous
     attempt instead of appending a duplicate copy (round-4 verdict item
     #1 — duplicate band rows would violate the distinct-input contract of
-    the downstream candidate cap, ops.py:164-232).  Reads of the
+    the downstream candidate cap, ops.bucket_pairs).  Reads of the
     accumulated table take only partitions with batch_id STRICTLY BELOW
     the current batch, so a retry never joins against its own partial
     output.  Consumers read the root path; Spark's partition discovery
@@ -163,9 +164,7 @@ def foreach_batch_candidates(
         # only new-vs-new pairs, commit, and permanently lose the
         # cross-batch pairs for this batch (round-5 advice).  Only a
         # genuinely absent/empty path means first batch.
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(accumulated_bands_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, jpath = _fs(spark, accumulated_bands_path)
         has_history = fs.exists(jpath) and len(fs.listStatus(jpath)) > 0
         if has_history:
             old_all = spark.read.option("basePath", accumulated_bands_path).parquet(
@@ -187,7 +186,10 @@ def foreach_batch_candidates(
                 delta = new_bands.groupBy("band_idx", "band_hash").agg(
                     F.count(F.lit(1)).alias("n")
                 )
-                prev_id = _latest_counts_snapshot(spark, counts_path, batch_id)
+                # strictly before this batch: a RETRIED micro-batch must not
+                # read its own partially-written snapshot as the previous state
+                snaps = _snapshot_ids(spark, counts_path)
+                prev_id = max((i for i in snaps if i < batch_id), default=None)
                 if prev_id is not None:
                     prev = spark.read.parquet(f"{counts_path}/snap_{prev_id}")
                     merged = (
@@ -216,28 +218,15 @@ def foreach_batch_candidates(
                 )
                 counts = spark.read.parquet(f"{counts_path}/snap_{batch_id}")
                 # retain current + previous; drop older snapshots
-                jvm = spark._jvm
-                jpath = jvm.org.apache.hadoop.fs.Path(counts_path)
-                fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-                for st in fs.listStatus(jpath):
-                    name = st.getPath().getName()
-                    if name.startswith("snap_"):
-                        try:
-                            sid = int(name[5:])
-                        except ValueError:
-                            continue
-                        if sid != batch_id and (prev_id is None or sid != prev_id):
-                            fs.delete(st.getPath(), True)
+                for sid in snaps:
+                    if sid not in (batch_id, prev_id):
+                        snap_fs, snap = _fs(spark, f"{counts_path}/snap_{sid}")
+                        snap_fs.delete(snap, True)
                 hot = counts.where(F.col("n") > max_bucket_size).select(
                     "band_idx", "band_hash"
                 )
             else:
-                hot = (
-                    target.groupBy("band_idx", "band_hash")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .where(F.col("n") > max_bucket_size)
-                    .select("band_idx", "band_hash")
-                )
+                hot = ops.hot_buckets(target, ["band_idx", "band_hash"], max_bucket_size)
             target = target.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
             probe = probe.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
         pairs = (

@@ -174,7 +174,7 @@ elif phase == "cred":
     bands.count()
     t0 = time.monotonic()
     # single-long bucket key: the grouped shuffle carries 12-byte rows
-    cands = ops.candidate_pairs_grouped(
+    cands = ops.candidate_pairs(
         bands, max_bucket_size=10_000, key_cols=("band_key",))
     # a_shard-partitioned handoff (the cluster shuffle keyed by the next
     # phase's reduce key), with repartition-on-the-partition-column FIRST

@@ -25,7 +25,7 @@ def main():
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sig = ops.with_signatures(docs, cfg)
     bands = ops.bands_table(sig)
-    cands = ops.candidate_pairs_grouped(bands, max_bucket_size=10000)
+    cands = ops.candidate_pairs(bands, max_bucket_size=10000)
     from lexis_minhash_spark.operators.dedup import exact_duplicate_groups
 
     from lexis_minhash_spark.operators.dedup import (
@@ -40,7 +40,7 @@ def main():
         ("Grouped candidate generation (single shuffle + in-SQL pair expansion)",
          fmt(cands)),
         ("Grouped candidates, packed 64-bit band key (the scale path: one-long exchange rows)",
-         fmt(ops.candidate_pairs_grouped(
+         fmt(ops.candidate_pairs(
              bands.select("doc_id", ops.pack_band_key().alias("band_key")),
              max_bucket_size=10000, key_cols=("band_key",)))),
         ("Similarity verify (codegen zip_with/aggregate, no Python)",

@@ -41,7 +41,7 @@ def run_dedup(spark):
     sig = ops.with_signatures(docs, CFG).persist()
     bands = ops.bands_table(sig).persist()
     packed = bands.select("doc_id", ops.pack_band_key().alias("band_key"))
-    cands = ops.candidate_pairs_grouped(
+    cands = ops.candidate_pairs(
         packed, max_bucket_size=10_000, key_cols=("band_key",)
     )
     ver = ops.verified_pairs(cands, sig, 0.75).persist()

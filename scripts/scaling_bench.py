@@ -40,7 +40,7 @@ t0 = time.monotonic()
 sig = ops.with_signatures(docs, CFG).persist()
 # bands persisted: the pre-agg hot-bucket cap consumes the table twice
 bands = ops.bands_table(sig).persist()
-cands = ops.candidate_pairs_grouped(bands, max_bucket_size=10_000)
+cands = ops.candidate_pairs(bands, max_bucket_size=10_000)
 # persist the edge list: the CC size probe + collect would otherwise
 # re-execute the candidates+verify subtree
 ver = ops.verified_pairs(cands, sig, 0.75).persist()

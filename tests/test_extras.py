@@ -271,6 +271,38 @@ class TestDedup:
         assert (1, 2) in got
         assert (1, 3) not in got and (2, 3) not in got
 
+    @pytest.mark.parametrize("cap", [None, 1000], ids=["uncapped", "capped"])
+    def test_simhash_hamming_values(self, spark, cap):
+        # every returned hamming is the driver-side popcount of the two
+        # fingerprints, and with 16 blocks (pigeonhole recall to distance
+        # 15) the pair set is exactly the brute-force one
+        base = "the quick brown fox jumps over the lazy dog and runs"
+        df = spark.createDataFrame(
+            [(i, f"{base} {w}") for i, w in enumerate(
+                ["away", "home", "away now", "far away", "home again", "off"], 1)]
+            + [(7, "completely unrelated text about cooking pasta with tomato sauce")],
+            "doc_id long, text string",
+        )
+        sim = dedup.with_simhash(df, CFG)
+        fp = {r.doc_id: r.simhash & (2**64 - 1) for r in sim.collect() if r.simhash}
+        handle: list = []
+        try:
+            pairs = dedup.simhash_candidate_pairs(
+                sim, num_blocks=16, max_hamming=15, max_bucket_size=cap,
+                cache_handle=handle,
+            ).collect()
+        finally:
+            for c in handle:
+                c.unpersist()
+        assert pairs
+        for r in pairs:
+            assert r.hamming == bin(fp[r.a] ^ fp[r.b]).count("1"), r
+        expected = {
+            (a, b) for a in fp for b in fp
+            if a < b and bin(fp[a] ^ fp[b]).count("1") <= 15
+        }
+        assert len(pairs) == len(expected) and {(r.a, r.b) for r in pairs} == expected
+
     def test_simhash_hot_block_cap(self, spark):
         # 12 identical docs → one fingerprint → every block bucket has 12
         # members; cap=5 quarantines them all. The near-dup pair (101, 102)

@@ -83,10 +83,23 @@ class TestPairsAndClusters:
         assert sims[(4, 5)] == 1.0
 
     def test_grouped_candidates_equal_join_candidates(self, sig_df):
+        # both bucket_pairs strategies — the self-join (uncapped) and the
+        # grouped expansion (capped, cap never reached) — must give exactly
+        # the brute-force pairs sharing an oracle band
+        buckets: dict = {}
+        for d, t in DOCS:
+            sig = O.oracle_signature(t, AO, BO, 5, 4)
+            if any(sig):
+                for band in O.oracle_bands(sig, 20, 5):
+                    buckets.setdefault(band, []).append(d)
+        expected = {
+            (a, b) for ids in buckets.values() for a in ids for b in ids if a < b
+        }
+        assert expected
         bands = ops.bands_table(sig_df)
-        j = {(r.a, r.b) for r in ops.candidate_pairs(bands).collect()}
-        g = {(r.a, r.b) for r in ops.candidate_pairs_grouped(bands).collect()}
-        assert j == g
+        for cap in (None, 10**9):
+            got = ops.candidate_pairs(bands, max_bucket_size=cap).collect()
+            assert len(got) == len(expected) and {(r.a, r.b) for r in got} == expected, cap
 
     @pytest.mark.parametrize("driver_threshold", [5_000_000, None])
     def test_clusters(self, spark, sig_df, driver_threshold):
@@ -136,10 +149,10 @@ class TestPairsAndClusters:
         ]
         docs = spark.createDataFrame(mega + near, "doc_id long, text string")
         bands = ops.bands_table(ops.with_signatures(docs, CFG))
-        capped = {(r.a, r.b) for r in ops.candidate_pairs_grouped(bands, max_bucket_size=50).collect()}
+        capped = {(r.a, r.b) for r in ops.candidate_pairs(bands, max_bucket_size=50).collect()}
         assert capped == {(1001, 1002)}
         # uncapped sanity: the mega bucket contributes its full pair set
-        uncapped = ops.candidate_pairs_grouped(bands, max_bucket_size=None)
+        uncapped = ops.candidate_pairs(bands, max_bucket_size=None)
         assert uncapped.count() == 200 * 199 // 2 + 1
 
     def test_grouped_candidates_no_self_pairs(self, spark):
@@ -149,7 +162,7 @@ class TestPairsAndClusters:
             [(42, 7), (42, 7), (42, 9), (5, 3), (5, 3)], "band_key long, doc_id long"
         )
         for cap in (None, 1000):
-            got = {(r.a, r.b) for r in ops.candidate_pairs_grouped(
+            got = {(r.a, r.b) for r in ops.candidate_pairs(
                 bands, max_bucket_size=cap, key_cols=("band_key",)).collect()}
             assert got == {(7, 9)}
 
@@ -160,17 +173,17 @@ class TestPairsAndClusters:
         # collision occurs at test scale (nor, in expectation, below ~1e8
         # buckets; merged buckets only ADD candidates for the verify).
         bands = ops.bands_table(sig_df)
-        exact = {(r.a, r.b) for r in ops.candidate_pairs_grouped(
+        exact = {(r.a, r.b) for r in ops.candidate_pairs(
             bands, max_bucket_size=None).collect()}
         packed_bands = bands.select(
             "doc_id", ops.pack_band_key().alias("band_key"))
-        packed = {(r.a, r.b) for r in ops.candidate_pairs_grouped(
+        packed = {(r.a, r.b) for r in ops.candidate_pairs(
             packed_bands, max_bucket_size=None, key_cols=("band_key",)).collect()}
         assert packed == exact
         # capped path groups on the packed key too
-        packed_capped = {(r.a, r.b) for r in ops.candidate_pairs_grouped(
+        packed_capped = {(r.a, r.b) for r in ops.candidate_pairs(
             packed_bands, max_bucket_size=50, key_cols=("band_key",)).collect()}
-        exact_capped = {(r.a, r.b) for r in ops.candidate_pairs_grouped(
+        exact_capped = {(r.a, r.b) for r in ops.candidate_pairs(
             bands, max_bucket_size=50).collect()}
         assert packed_capped == exact_capped
 

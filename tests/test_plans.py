@@ -5,7 +5,8 @@ These tests pin the *shape* of the executed plans, not timings:
 - filters reach the scan (PushedFilters)
 - the verify stage is whole-stage-codegen SQL (no ArrowEvalPython)
 - the signature stage is exactly ONE ArrowEvalPython pass
-- grouped candidate generation shuffles the bands table exactly once
+- every candidate family pairs bucket members through ops.bucket_pairs:
+  capped → cap before a grouped collect_list, uncapped → array-free join
 """
 
 import re
@@ -58,7 +59,7 @@ class TestStagePlans:
 
     def test_verify_stage_is_pure_sql(self, spark, docs):
         sig = ops.with_signatures(docs, CFG)
-        cands = ops.candidate_pairs_grouped(ops.bands_table(sig), max_bucket_size=1000)
+        cands = ops.candidate_pairs(ops.bands_table(sig), max_bucket_size=1000)
         ver = ops.verified_pairs(cands, sig, 0.75)
         plan = plan_of(ver)
         # exactly the signature UDF evaluations (cands side + two sig joins
@@ -70,7 +71,7 @@ class TestStagePlans:
         try:
             sig_cached.count()
             ver2 = ops.verified_pairs(
-                ops.candidate_pairs_grouped(ops.bands_table(sig_cached), max_bucket_size=1000),
+                ops.candidate_pairs(ops.bands_table(sig_cached), max_bucket_size=1000),
                 sig_cached,
                 0.75,
             )
@@ -86,7 +87,7 @@ class TestStagePlans:
         sig = ops.with_signatures(docs, CFG).cache()
         try:
             bands = ops.bands_table(sig)
-            cands = ops.candidate_pairs_grouped(bands, max_bucket_size=1000)
+            cands = ops.candidate_pairs(bands, max_bucket_size=1000)
             plan = plan_of(cands)
             # exchanges: count-only cap agg [1] + posting groupBy(band) [2]
             # + final distinct [3].  The cap agg partial-aggregates map-side
@@ -97,31 +98,50 @@ class TestStagePlans:
         finally:
             sig.unpersist()
 
-    def test_grouped_candidates_cap_precedes_collect_set(self, spark, docs):
-        # round-2 verdict item #1: the hot-bucket filter must run BEFORE the
-        # array aggregation, so a pathological bucket's id array is never
-        # materialized in any task.  In the executed plan tree (printed
-        # root-first) the collect_set aggregate must therefore appear ABOVE
-        # (= consume) the broadcast anti-join.
-        sig = ops.with_signatures(docs, CFG).cache()
+    @pytest.mark.parametrize(
+        "family, capped",
+        [(f, c) for f in ("minhash", "simhash", "ngram", "ann") for c in (True, False)],
+        ids=lambda v: v if isinstance(v, str) else ("capped" if v else "uncapped"),
+    )
+    def test_bucket_pairs_strategy(self, spark, docs, family, capped):
+        # one candidate rule, two strategies (ops.bucket_pairs).  Capped:
+        # the hot-bucket anti-join runs BEFORE the array aggregation, so a
+        # pathological bucket's member array is never built in any task —
+        # plans print root-first, so collect_list must sit ABOVE (= consume)
+        # the LeftAnti, and no post-aggregation size cap may remain.
+        # Uncapped: no member array at all (bucket self-join).
+        from lexis_minhash_spark.operators import dedup
+
+        cap = 100 if capped else None
+        handle: list = []
+        if family == "minhash":
+            df = ops.candidate_pairs(
+                ops.bands_table(ops.with_signatures(docs, CFG)), max_bucket_size=cap
+            )
+        elif family == "simhash":
+            df = dedup.simhash_candidate_pairs(
+                dedup.with_simhash(docs, CFG), max_bucket_size=cap, cache_handle=handle
+            )
+        elif family == "ngram":
+            df = dedup.ngram_jaccard_pairs(
+                docs, n=3, threshold=0.3, max_doc_freq=cap, cache_handle=handle
+            )
+        else:
+            emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+            df = dedup.lsh_bucketed_cosine_pairs(
+                emb, dim=64, threshold=0.9, max_bucket_size=cap, cache_handle=handle
+            )
         try:
-            bands = ops.bands_table(sig)
-            plan = plan_of(ops.candidate_pairs_grouped(bands, max_bucket_size=1000))
-            assert "LeftAnti" in plan, plan
-            agg_pos = plan.index("collect_list")
-            anti_pos = plan.index("LeftAnti")
-            assert agg_pos < anti_pos, plan
-            # and no post-agg size cap remains (only the >= 2 pair filter)
-            assert not re.search(r"size\(ids[^)]*\) <= ", plan), plan
+            plan = plan_of(df)
         finally:
-            sig.unpersist()
-
-    def test_ngram_cap_precedes_collect_set(self, spark, docs):
-        from lexis_minhash_spark.operators.dedup import ngram_jaccard_pairs
-
-        plan = plan_of(ngram_jaccard_pairs(docs, n=3, threshold=0.3, max_doc_freq=100))
-        assert "LeftAnti" in plan, plan
-        assert plan.index("collect_list") < plan.index("LeftAnti"), plan
+            for c in handle:
+                c.unpersist()
+        if capped:
+            assert "LeftAnti" in plan and "collect_list" in plan, plan
+            assert plan.index("collect_list") < plan.index("LeftAnti"), plan
+            assert not re.search(r"size\([^)]*\) <= ", plan), plan
+        else:
+            assert "collect_list" not in plan, plan
 
     def test_slots_and_scored_query_are_pure_sql(self, spark, docs):
         # the slot dump and the scored query read sig_arr in SQL: every
@@ -202,24 +222,6 @@ class TestStagePlans:
         m = _re.search(r"HashAggregate\(keys=\[a[^\]]*\bb[^\]]*\]", plan)
         assert m, plan
         assert "embedding" not in m.group(0), m.group(0)
-
-    def test_ann_cap_precedes_bucket_self_join(self, spark):
-        # round-3 verdict item #1: the ANN hot-bucket quarantine must run
-        # BEFORE the (table_idx, bucket) self-join.  Plans print root-first,
-        # so the self-join node must appear ABOVE (= consume) the broadcast
-        # anti-join.
-        from lexis_minhash_spark.operators.dedup import lsh_bucketed_cosine_pairs
-
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        plan = plan_of(
-            lsh_bucketed_cosine_pairs(emb, dim=64, threshold=0.9, max_bucket_size=100)
-        )
-        assert "LeftAnti" in plan, plan
-        m = re.search(
-            r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)[^\n]*table_idx", plan
-        )
-        assert m, plan
-        assert m.start() < plan.index("LeftAnti"), plan
 
     def test_bucketed_sig_checkpoint_elides_sig_exchanges(self, spark, tmp_path, docs):
         # round-5: with a BUCKETED signature checkpoint (bucketBy(id)) the
